@@ -19,6 +19,13 @@ consume the spec:
 Patterns are written in the Java-regex ∩ RE2 compatible subset
 (``\\d \\s \\w \\b`` classes, inline ``(?m)``/``(?i)`` flags, lazy
 quantifiers — all identical in both engines).
+
+**Deliberate deviation from the reference's regex chain**: both speaker-label
+patterns of ``remove_speaker_labels`` accept leading ``[ \\t]*`` before the
+label. ``remove_brackets_content`` runs first and deletes a position tag
+such as ``{\\an8}``, which leaves a space at the start of the line; the
+reference's ``^``-anchored patterns then miss ``{\\an8} JOHN: …`` and keep
+the label in the cleaned text.
 """
 
 from __future__ import annotations
@@ -54,10 +61,11 @@ CLEANING_SPECS: dict[str, list[Op]] = {
         ("re", r"<[^>]+>", ""),
         ("strip",),
     ],
-    # F4 — preprocessing_agent.py:92-105
+    # F4 — preprocessing_agent.py:92-105, plus leading [ \t]* (see the
+    # module docstring's deviation note)
     "remove_speaker_labels": [
-        ("re", r"(?m)^[A-Z][A-Z\s]{1,20}:\s*", ""),
-        ("re", r"(?m)^\w[\w\s]{1,20}:\s*", ""),
+        ("re", r"(?m)^[ \t]*[A-Z][A-Z\s]{1,20}:\s*", ""),
+        ("re", r"(?m)^[ \t]*\w[\w\s]{1,20}:\s*", ""),
         ("re", r"<v\s+[^>]+>", ""),
         ("strip",),
     ],

@@ -3,10 +3,21 @@ Spark-first.
 
 Division of labor mirrors the reference's deliberate two-level design
 (``clustering/graph_creator.py:162-206``): the *wide* step (assigning every
-movie to one of ≤800 micro-clusters) runs distributed (Spark ML KMeans);
-the *small* step (agglomerating ≤800 centroids into a tree and rebalancing
-it) runs on the driver over a few KB of centroids — the analog of a
-broadcast/local stage, exact and cheap at any corpus size.
+movie to one of ≤800 micro-clusters) runs on the executors; the *small*
+step (agglomerating ≤800 centroids into a tree and rebalancing it) runs on
+the driver over a few KB of centroids — the analog of a broadcast/local
+stage, exact and cheap at any corpus size.
+
+The wide step (:func:`kmeans_assign`) is a seeded, weighted k-means++/Lloyd
+numpy kernel (:func:`weighted_kmeans`) run in two executor passes over
+Arrow batches: every input partition (coalesced to at most
+``defaultParallelism``) clusters its own rows into at most ``k`` weighted
+centers, then one task merges those ``≤ defaultParallelism × k`` centers
+into the final ``k`` and only they reach the driver. A lazy map-only pass
+then labels each row with its nearest center. No Spark ML: a fit is one
+collect over two stages, where Spark ML's KMeans ran a k-means|| init plus
+up to 20 Lloyd rounds, each its own job. A pass-1 task holds its
+partition's rows as one float64 matrix (rows × d × 8 bytes).
 
 Ward linkage is implemented here directly (Lance-Williams recurrence over
 the centroid distance matrix — scipy isn't available in this environment);
@@ -17,6 +28,7 @@ semantics match ``scipy.cluster.hierarchy.linkage(method='ward')`` /
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Callable
 
 import numpy as np
@@ -37,34 +49,235 @@ def n_micro_clusters(n: int) -> int:
 
 
 # ---------------------------------------------------------------------------
-# C1 — distributed micro-clustering (Spark ML KMeans)
+# C1 — distributed micro-clustering (partition-local k-means + one merge)
 # ---------------------------------------------------------------------------
+
+#: Lloyd rounds per fit (Spark ML KMeans's ``maxIter`` default) and the
+#: relative cost improvement below which the rounds stop early.
+LLOYD_ITERS = 20
+LLOYD_TOL = 1e-4
+#: seeded k-means++/Lloyd restarts in the merge; the lowest weighted cost
+#: wins. The merge input is at most ``defaultParallelism × k`` rows, so
+#: restarts are cheap there and nowhere else.
+MERGE_RESTARTS = 4
+#: cap on the entries of one rows × centers distance block (32 MB of
+#: float64), so a partition of any size never builds an n × k matrix.
+_BLOCK = 1 << 22
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Index of the nearest center (lowest index on ties) and the squared
+    distance to it, for every row of ``X``, in row blocks."""
+    labels = np.empty(len(X), dtype=np.int64)
+    d2 = np.empty(len(X))
+    cc = (C * C).sum(1)
+    step = max(1, _BLOCK // max(1, len(C)))
+    for lo in range(0, len(X), step):
+        x = X[lo : lo + step]
+        d = (x * x).sum(1)[:, None] - 2.0 * (x @ C.T) + cc[None, :]
+        lab = d.argmin(1)
+        labels[lo : lo + step] = lab
+        d2[lo : lo + step] = np.maximum(d[np.arange(len(x)), lab], 0.0)
+    return labels, d2
+
+
+def _kmeanspp(X: np.ndarray, w: np.ndarray, k: int, rng) -> np.ndarray:
+    """Greedy weighted k-means++ seeding over distinct rows: each step draws
+    ``2 + ln k`` candidates with probability ∝ weight × squared distance to
+    the chosen centers and keeps the one that lowers the weighted cost most
+    (Arthur & Vassilvitskii 2007; the greedy trials as in scikit-learn)."""
+    trials = 2 + int(np.log(k))
+    cum = np.cumsum(w)
+    first = min(int(np.searchsorted(cum, rng.random() * cum[-1], "right")), len(X) - 1)
+    chosen = [first]
+    d2 = ((X - X[first]) ** 2).sum(1)
+    xx = (X * X).sum(1)
+    for _ in range(1, k):
+        cum = np.cumsum(w * d2)
+        if cum[-1] <= 0:
+            break
+        cand = np.minimum(
+            np.searchsorted(cum, rng.random(trials) * cum[-1], "right"), len(X) - 1
+        )
+        dc = xx[cand][:, None] - 2.0 * (X[cand] @ X.T) + xx[None, :]
+        dc = np.minimum(d2[None, :], np.maximum(dc, 0.0))
+        best = int(np.argmin(dc @ w))
+        chosen.append(int(cand[best]))
+        d2 = dc[best]
+    return X[chosen].copy()
+
+
+def _lloyd(X: np.ndarray, w: np.ndarray, C: np.ndarray):
+    """Weighted Lloyd rounds from centers ``C``. A center left with no rows
+    moves to the row that costs most, so every center keeps members.
+    Returns ``(centers, labels, cost)``."""
+    C = C.copy()
+    k = len(C)
+    prev = np.inf
+    for it in range(LLOYD_ITERS + 1):
+        labels, d2 = _nearest(X, C)
+        cost = float(w @ d2)
+        if it == LLOYD_ITERS or prev - cost <= LLOYD_TOL * cost:
+            return C, labels, cost
+        prev = cost
+        mass = np.bincount(labels, weights=w, minlength=k)
+        sums = np.stack(
+            [np.bincount(labels, weights=w * x, minlength=k) for x in X.T], axis=1
+        )
+        full = mass > 0
+        C[full] = sums[full] / mass[full, None]
+        empty = np.flatnonzero(~full)
+        if len(empty):
+            C[empty] = X[np.argsort(-(w * d2), kind="stable")[: len(empty)]]
+
+
+def weighted_kmeans(
+    X: np.ndarray, w: np.ndarray, k: int, seed: int, stream: int = 0, restarts: int = 1
+) -> tuple[np.ndarray, np.ndarray]:
+    """Seeded weighted k-means of the rows ``X`` (weights ``w``).
+
+    Returns ``(centers, mass)``: at most ``k`` centers, each with the total
+    weight of its rows. Equal rows are merged and sorted first, so the
+    result does not depend on row order. When at most ``k`` distinct rows
+    remain they are the centers, exactly. Otherwise the best of
+    ``restarts`` greedy k-means++/Lloyd runs by weighted cost wins; the
+    runs draw from the random stream ``(seed, stream)``."""
+    if not np.isfinite(X).all():
+        raise ValueError("k-means input holds a NaN, infinite or null feature")
+    X, inv = np.unique(X, axis=0, return_inverse=True)
+    w = np.bincount(inv.reshape(-1), weights=w, minlength=len(X))
+    if len(X) <= k:
+        return X, w
+    rng = np.random.default_rng([seed % 2**64, stream])
+    best = None
+    for _ in range(restarts):
+        C, labels, cost = _lloyd(X, w, _kmeanspp(X, w, k, rng))
+        if best is None or cost < best[2]:
+            best = (C, labels, cost)
+    C, labels, _ = best
+    mass = np.bincount(labels, weights=w, minlength=k)
+    return C[mass > 0], mass[mass > 0]
+
+
+def _matrix(batch, cols: list[str]) -> np.ndarray:
+    """The (double) feature columns of an Arrow batch as a rows × d matrix
+    (a null reads as NaN, which :func:`weighted_kmeans` rejects)."""
+    return np.stack(
+        [batch.column(c).to_numpy(zero_copy_only=False) for c in cols], axis=1
+    )
+
+
+#: schema of both fit passes' output: one weighted center per row.
+_CENTERS_SCHEMA = "_w double, _c array<double>"
+
+
+def _centers_batch(C: np.ndarray, mass: np.ndarray):
+    """Centers and their weights as one Arrow batch of :data:`_CENTERS_SCHEMA`."""
+    import pyarrow as pa
+
+    offsets = np.arange(0, C.size + 1, C.shape[1], dtype=np.int32)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(mass), pa.ListArray.from_arrays(offsets, C.ravel())],
+        names=["_w", "_c"],
+    )
+
+
+def _local_centers(batches, cols: list[str], k: int, seed: int):
+    """Pass 1, one task per (coalesced) input partition: cluster the
+    partition's rows into at most ``k`` weighted centers."""
+    from pyspark import TaskContext
+
+    mats = [_matrix(b, cols) for b in batches if b.num_rows]
+    if not mats:
+        return
+    X = np.concatenate(mats)
+    pid = TaskContext.get().partitionId()
+    C, mass = weighted_kmeans(X, np.ones(len(X)), k, seed, stream=pid + 1)
+    yield _centers_batch(C, mass)
+
+
+def _merge_centers(batches, d: int, k: int, seed: int):
+    """Pass 2, a single task: the weighted centers of every partition into
+    the final ``k``, best of :data:`MERGE_RESTARTS` restarts."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return
+    w = np.concatenate([b.column("_w").to_numpy() for b in batches])
+    X = np.concatenate(
+        [b.column("_c").flatten().to_numpy().reshape(-1, d) for b in batches]
+    )
+    yield _centers_batch(*weighted_kmeans(X, w, k, seed, stream=0, restarts=MERGE_RESTARTS))
+
+
+def _assign_batches(batches, cols: list[str], centers: np.ndarray):
+    """Each row's nearest final center, appended as ``cluster``."""
+    import pyarrow as pa
+
+    for b in batches:
+        labels, _ = _nearest(_matrix(b, cols), centers)
+        yield b.append_column("cluster", pa.array(labels.astype(np.int32)))
+
+
+def _local_pass(rows, cols: list[str], k: int, seed: int):
+    """Pass 1 as a frame ``[_w, _c]``: at most ``k`` weighted centers per
+    partition of ``rows`` coalesced to ``defaultParallelism`` partitions."""
+    return (
+        rows.select(*cols)
+        .coalesce(rows.sparkSession.sparkContext.defaultParallelism)
+        .mapInArrow(partial(_local_centers, cols=cols, k=k, seed=seed), _CENTERS_SCHEMA)
+    )
 
 
 def kmeans_assign(features_df, key_col: str, feature_cols: list[str], k: int | None = None, seed: int = 42):
-    """Assign each row to one of ``k`` micro-clusters.
+    """Assign each row to one of at most ``k`` micro-clusters.
 
-    Returns ``(assignments DataFrame[key_col, cluster], centers ndarray)``.
-    Spark ML KMeans is distributed Lloyd (vs the reference's MiniBatchKMeans
-    — algorithmically different by design, SURVEY §2.6 C1 [PROP]); the
-    centroids live on the driver afterwards, which is the point: the wide
-    data never does.
+    Returns ``(assignments, centers)``: ``assignments`` is the lazy frame
+    ``[key_col, *feature_cols (as double), cluster int]`` and ``centers``
+    the ``m × d`` array of final centers (``m ≤ k``; ``m`` is the number of
+    distinct rows when that is smaller).
+
+    Two executor passes and one k-row collect (the reference's wide
+    MiniBatchKMeans step, ``graph_creator.py:180-186``, re-expressed — a
+    different algorithm by design, SURVEY §2.6 C1 [PROP]):
+
+    1. the input, coalesced to at most ``defaultParallelism`` partitions,
+       is clustered partition-locally into at most ``k`` weighted centers
+       each (:func:`weighted_kmeans`, random stream per partition index);
+    2. one task merges those ≤ ``defaultParallelism × k`` weighted centers
+       into the final ``k`` — best of :data:`MERGE_RESTARTS` seeded
+       restarts by weighted cost — and only those ``k`` rows reach the
+       driver.
+
+    The assignment is a third, lazy map-only pass: nearest final center
+    per row. The result is a function of ``seed``, the rows and how they
+    are partitioned. Raises ``ValueError`` on an empty input.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.feature import VectorAssembler
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
-    if features_df.isEmpty():
-        raise ValueError("KMeans training requires a non-empty corpus")
+    from cinegraph_spark.session import ensure_shipped
+
+    ensure_shipped(features_df.sparkSession)  # the Arrow passes run this module
+    cols = list(feature_cols)
     if k is None:
         k = n_micro_clusters(features_df.count())
-    assembled = VectorAssembler(
-        inputCols=feature_cols, outputCol="_features"
-    ).transform(features_df)
-    model = KMeans(
-        k=k, seed=seed, featuresCol="_features", predictionCol="cluster"
-    ).fit(assembled)
-    assignments = model.transform(assembled).select(key_col, "cluster")
-    centers = np.vstack([np.asarray(c) for c in model.clusterCenters()])
+    if k < 1:
+        raise ValueError(f"k must be positive, got {k}")
+    rows = features_df.selectExpr(
+        f"`{key_col}`", *[f"CAST(`{c}` AS DOUBLE) AS `{c}`" for c in cols]
+    )
+    merged = (
+        _local_pass(rows, cols, k, seed)
+        .repartition(1)
+        .mapInArrow(partial(_merge_centers, d=len(cols), k=k, seed=seed), _CENTERS_SCHEMA)
+        .collect()
+    )
+    if not merged:
+        raise ValueError("KMeans training requires a non-empty corpus")
+    centers = np.array([r["_c"] for r in merged], dtype=np.float64)
+    assignments = rows.mapInArrow(
+        partial(_assign_batches, cols=cols, centers=centers),
+        StructType([*rows.schema.fields, StructField("cluster", IntegerType(), False)]),
+    )
     return assignments, centers
 
 

@@ -21,6 +21,8 @@ moments; no Python, no driver loop, scales linearly in windows.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -98,29 +100,42 @@ def movie_features(
     return result
 
 
+def scale_moments(feature_cols: list[str]) -> list[str]:
+    """The global moments :func:`standard_scale` scales by, as SQL aggregate
+    expressions: ``_mu_{c}`` (mean) and ``_sd_{c}`` (population std) per
+    feature column."""
+    return [f"avg(`{c}`) AS `_mu_{c}`" for c in feature_cols] + [
+        f"stddev_pop(`{c}`) AS `_sd_{c}`" for c in feature_cols
+    ]
+
+
+def scale_by(feature_cols: list[str], moment: Callable[[str], str]) -> list[str]:
+    """``(x - mean) / std`` per feature column as SQL expressions (a zero
+    std divides by 1), where ``moment(name)`` is the SQL of the
+    :func:`scale_moments` value ``name``: a column reference or a literal.
+
+    SQL strings rather than ``Column`` trees: a ``selectExpr`` of them is
+    one driver→JVM call, where the ``Column`` form cost several per feature
+    (about 0.7 s for 24 features on a 4-core host)."""
+    out = []
+    for c in feature_cols:
+        mu, sd = moment(f"_mu_{c}"), moment(f"_sd_{c}")
+        out.append(
+            f"(`{c}` - {mu}) / CASE WHEN {sd} != 0 THEN {sd} ELSE 1.0D END AS `{c}`"
+        )
+    return out
+
+
 def standard_scale(df: DataFrame, key_col: str, feature_cols: list[str]) -> DataFrame:
     """A4 — global (x - mean) / stddev_pop per feature column
     (sklearn StandardScaler semantics, ``graph_creator.py:114``).
 
     One tiny global aggregate (1 row × 2k values) cross-joined back —
     Spark broadcasts it; the scan stays map-only."""
-    stats = df.agg(
-        *[F.avg(c).alias(f"_mu_{c}") for c in feature_cols],
-        *[F.stddev_pop(c).alias(f"_sd_{c}") for c in feature_cols],
+    stats = df.selectExpr(*scale_moments(feature_cols))
+    return df.crossJoin(F.broadcast(stats)).selectExpr(
+        f"`{key_col}`", *scale_by(feature_cols, lambda name: f"`{name}`")
     )
-    scaled = df.crossJoin(F.broadcast(stats)).select(
-        key_col,
-        *[
-            (
-                (F.col(c) - F.col(f"_mu_{c}"))
-                / F.when(F.col(f"_sd_{c}") != 0, F.col(f"_sd_{c}")).otherwise(
-                    F.lit(1.0)
-                )
-            ).alias(c)
-            for c in feature_cols
-        ],
-    )
-    return scaled
 
 
 def centroid(df: DataFrame, feature_cols: list[str]) -> DataFrame:

@@ -2,9 +2,14 @@
 the reference's ``construct_graph`` (``graph_creator.py:381-392``) and the
 FastAPI serving layer (``api/api.py:35-74``).
 
-Pipeline (one lazy DAG + two deliberate driver-side small steps):
+Pipeline (three eager collects of ≤ k rows each, a fourth of representative
+keys with a namer, then the driver-side small steps):
 
-    features(24-dim) ──standard_scale──► KMeans(≤800 micro-clusters)   [wide]
+    features(24-dim) ──agg──► n, mean, std per feature           [1 row]
+    features ──scale (literals)──► pass 1: ≤k weighted centers
+      per partition ──► pass 2: one task merges to k centers     [wide]
+    scaled ──nearest center──► assignments(key, features, cluster)
+      ──groupBy cluster──► count + feature sums                  [≤k rows]
     centroids(≤800×24, a few KB) ──ward──► tree ──rebalance──► flatten  [driver]
     graph/membership rows ──createDataFrame──► serving tables           [tiny]
 
@@ -14,6 +19,8 @@ exactly the reference's own scalability argument, kept intact.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -26,11 +33,18 @@ from cinegraph_spark.operators.clustering import (
     flatten_tree,
     kmeans_assign,
     linkage_to_tree,
+    n_micro_clusters,
     rebalance_tree,
     ward_linkage,
 )
-from cinegraph_spark.operators.features import standard_scale
+from cinegraph_spark.operators.features import scale_by, scale_moments
 from cinegraph_spark.schemas import GRAPH
+
+
+def _sql_double(x: float | None) -> str:
+    """``x`` as an exact SQL double literal; NULL for None or a non-finite
+    value (the clustering then rejects the column)."""
+    return f"{x!r}D" if x is not None and math.isfinite(x) else "CAST(NULL AS DOUBLE)"
 
 
 def _iter_nodes(tree: dict):
@@ -114,10 +128,13 @@ def build_graph_tables(
     (key_col, graph_id) mapping every input row to its leaf node.
 
     Driver-memory contract (the 100 TB shape): the only things collected
-    are (a) the ≤k per-micro-cluster summaries (count + feature sums — a
-    few KB), (b) when a ``namer`` is supplied, node_count × 15
-    representative keys, and (c) nothing else. Tree leaves carry
-    *micro-cluster ids* (not row ordinals), so ward/rebalance/flatten are
+    are (a) one row of row count + scaling moments, (b) the ≤k final
+    micro-cluster centers (:func:`kmeans_assign`), (c) the ≤k
+    per-micro-cluster summaries (count + feature sums — a few KB), (d) when
+    a ``namer`` is supplied, node_count × 15 representative keys, and (e)
+    nothing else. The assignment pass carries the scaled features next to
+    ``cluster``, so the summary is one ``groupBy`` with no join. Tree leaves
+    carry *micro-cluster ids* (not row ordinals), so ward/rebalance/flatten are
     O(k); per-row leaf assignment is a broadcast join of the tiny
     cluster→leaf map onto the distributed assignments. Representatives
     (C6) and shift labels (C7) come from per-cluster aggregates /
@@ -131,7 +148,11 @@ def build_graph_tables(
     zero clusters, not a crash: a 100 TB pipeline stage must survive an
     upstream filter leaving nothing.
     """
-    if features.isEmpty():
+    # one aggregate: row count (and so emptiness) plus the scaling moments
+    stats = features.selectExpr(
+        "count(1) AS _n", *scale_moments(feature_cols)
+    ).collect()[0]
+    if stats["_n"] == 0:
         graph_df = spark.createDataFrame(
             [(0, "root", "root", "root", 0)], schema=GRAPH
         )
@@ -139,18 +160,19 @@ def build_graph_tables(
             [], f"{key_col} long, graph_id long"
         )
         return graph_df, membership_df
-    scaled = standard_scale(features, key_col, feature_cols).persist()
+    if k is None:
+        k = n_micro_clusters(stats["_n"])
+    scaled = features.selectExpr(
+        f"`{key_col}`", *scale_by(feature_cols, lambda name: _sql_double(stats[name]))
+    ).persist()
+    # assignments carry the scaled features next to ``cluster``
     assignments, centers = kmeans_assign(scaled, key_col, feature_cols, k=k, seed=seed)
     assignments = assignments.persist()
 
     # per-micro-cluster summaries: ≤k rows × (1 + d) values on the driver.
     summary = (
-        assignments.join(scaled, key_col)
-        .groupBy("cluster")
-        .agg(
-            F.count("*").alias("_n"),
-            *[F.sum(c).alias(c) for c in feature_cols],
-        )
+        assignments.groupBy("cluster")
+        .agg(F.expr("count(1) AS _n"), *[F.expr(f"sum(`{c}`) AS `{c}`") for c in feature_cols])
         .collect()
     )
     counts = {int(r["cluster"]): int(r["_n"]) for r in summary}
@@ -160,14 +182,16 @@ def build_graph_tables(
     }
 
     # driver-side small steps: ward over ≤800 centroids, rebalance, flatten.
-    # Leaves carry their micro-cluster id; empty clusters (KMeans can emit
-    # them) still appear as ward points but attach no members.
+    # Leaves carry their micro-cluster id; a center no row is nearest to
+    # still appears as a ward point but attaches no members.
     members = {cid: [cid] for cid in range(len(centers))}
     Z = ward_linkage(centers)
     tree = rebalance_tree(linkage_to_tree(Z, members))
     annotate_tree(tree, counts, sums, list(feature_cols))
     if namer is not None:
-        node_representatives(assignments, scaled, tree, key_col, feature_cols)
+        node_representatives(
+            assignments.select(key_col, "cluster"), scaled, tree, key_col, feature_cols
+        )
     flat: FlatGraph = flatten_tree(tree, namer=namer)
 
     from cinegraph_spark.session import local_df

@@ -33,12 +33,19 @@ def stub_score_col(
     window_tokens: Column, key: Column, window_id: Column, emotion_index: int
 ) -> Column:
     """Deterministic score in [0,1): integer arithmetic only, so Spark and
-    DuckDB produce bit-identical doubles (single final division)."""
+    DuckDB produce bit-identical doubles (single final division).
+
+    The key is reduced with ``pmod(key, _MOD)`` before it is multiplied: a
+    hashed 64-bit key times 13 overflows (an ANSI error), and a negative
+    key would give a negative score. For a non-negative key whose product
+    fits in 64 bits the score is unchanged."""
     tok_weight = F.aggregate(
         window_tokens, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
     )
     mixed = (
-        tok_weight * (emotion_index + 1) + key * 13 + window_id * 7
+        tok_weight * (emotion_index + 1)
+        + F.pmod(key, F.lit(_MOD)) * 13
+        + window_id * 7
     ) % _MOD
     return mixed.cast("double") / float(_MOD)
 
@@ -66,8 +73,10 @@ def stub_scores_sql(tokens_slice_expr: str, key_expr: str, window_id_expr: str) 
     )
     out = []
     for i, e in enumerate(EMOTIONS):
+        # pmod: DuckDB's % keeps the dividend's sign, as Spark's does
+        key_mod = f"((({key_expr}) % {_MOD}) + {_MOD}) % {_MOD}"
         mixed = (
-            f"(coalesce({tok_weight}, 0) * {i + 1} + {key_expr} * 13 "
+            f"(coalesce({tok_weight}, 0) * {i + 1} + {key_mod} * 13 "
             f"+ {window_id_expr} * 7) % {_MOD}"
         )
         out.append(f"CAST({mixed} AS DOUBLE) / {_MOD}.0 AS {e}")

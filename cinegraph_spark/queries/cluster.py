@@ -1,8 +1,10 @@
 """Clustering/hierarchy pipeline queries (C1-C8) — [PROP] operators
-(SURVEY §2.6): KMeans micro-clustering, ward tree, rebalance, flatten.
-Nondeterministic across environments at the margins (KMeans init
-partitioning), so these take the driver's rows-only gate; the structural
-invariants are enforced by tests/test_clustering.py.
+(SURVEY §2.6): k-means micro-clustering, ward tree, rebalance, flatten.
+The micro-clusters depend on the seed and on how the features are
+partitioned (each partition is clustered locally before one merge, and
+the partition count follows ``defaultParallelism``), so these take the
+driver's rows-only gate; the structural invariants are enforced by
+tests/test_clustering.py.
 """
 
 from __future__ import annotations
@@ -22,15 +24,16 @@ _CACHE: dict[tuple, tuple] = {}
 
 def _tables(spark, sf_dir):
     """Build (and memoize per sf_dir) the document graph tables with a
-    fixed k so repeated query calls don't re-run KMeans."""
+    fixed k so repeated query calls don't re-run the clustering."""
     key = (id(spark.sparkContext), sf_dir)
     if key not in _CACHE:
         from cinegraph_spark.queries import load_all
         from cinegraph_spark.session import bounded_shuffle
 
         feats = load_all()["pipeline_movie_features"].spark(spark, sf_dir)
-        # KMeans iterations + the summary aggregation execute eagerly in
-        # here — bound the plain session's 200 shuffle partitions for them
+        # the moments aggregate, the k-means merge shuffle and the
+        # per-cluster summary execute eagerly in here — bound the plain
+        # session's 200 shuffle partitions for them
         with bounded_shuffle(spark):
             _CACHE[key] = build_graph_tables(
                 spark, feats, "doc_id", _FEATURE_COLS, k=20, seed=42
@@ -45,7 +48,7 @@ def _tables(spark, sf_dir):
 )
 def cluster_graph_nodes(spark, sf_dir):
     """The materialized document graph (root/node/leaf rows with dot-paths)
-    built by: stub-scored windows → 24-dim features → scale → KMeans(20) →
+    built by: stub-scored windows → 24-dim features → scale → k-means(20) →
     ward → rebalance → flatten (C1-C5, C8)."""
     graph, _ = _tables(spark, sf_dir)
     return graph

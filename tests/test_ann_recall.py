@@ -4,10 +4,11 @@ more probes can only help.
 
 The oracle-checked `vec_ann_ivf_topk` uses the driver tables' `label` as
 the cell — exactly reproducible cross-engine but geometry-blind (labels are
-synthetic). This test runs the same operator with cells assigned by seeded
-Spark ML KMeans (the production IVF build step) and checks recall against
-brute force: ~0.5 on the uniform-ish synthetic vectors vs ~0.2 expected
-from probing 2 random cells of 10.
+synthetic). This test runs the same operator with cells assigned by the
+seeded partition-local k-means of ``kmeans_assign`` (the production IVF
+build step) and checks recall against brute force: ~0.5 on the
+uniform-ish synthetic vectors vs ~0.2 expected from probing 2 random cells
+of 10.
 """
 
 from __future__ import annotations

@@ -330,3 +330,83 @@ def test_end_to_end_graph_build(spark, sf_dir):
     assert root_of(graph).count() == 1
     kids = children_of(graph, "root").collect()
     assert len(kids) == roots[0].children_count
+
+
+# --- C1 kernel: partition-local k-means + one merge (quick tier) -----------
+
+
+def _blob_frame(spark, n_per_blob=40, n_blobs=12, dim=6, partitions=6, seed=0):
+    rng = np.random.default_rng(seed)
+    centres = rng.normal(size=(n_blobs, dim)) * 100.0
+    rows = [
+        (i, *map(float, centres[i % n_blobs] + rng.normal(size=dim)))
+        for i in range(n_blobs * n_per_blob)
+    ]
+    schema = "id long, " + ", ".join(f"f{j} double" for j in range(dim))
+    df = spark.createDataFrame(rows, schema).repartition(partitions, "id")
+    return df, [f"f{j}" for j in range(dim)]
+
+
+def test_kmeans_one_cluster_per_separated_blob(spark):
+    df, cols = _blob_frame(spark)
+    assign, centers = kmeans_assign(df, "id", cols, k=12, seed=42)
+    assert centers.shape == (12, len(cols))
+    by_blob: dict[int, set] = {}
+    for r in assign.select("id", "cluster").collect():
+        by_blob.setdefault(r.id % 12, set()).add(r.cluster)
+    assert all(len(c) == 1 for c in by_blob.values()), by_blob
+    assert len({next(iter(c)) for c in by_blob.values()}) == 12
+
+
+def test_kmeans_distinct_rows_become_the_centers(spark):
+    distinct = [(float(i), float(i * i % 7), -float(i)) for i in range(9)]
+    rows = [(n, *distinct[n % 9]) for n in range(45)]
+    df = spark.createDataFrame(rows, "id long, a double, b double, c double").repartition(3)
+    assign, centers = kmeans_assign(df, "id", ["a", "b", "c"], k=20, seed=42)
+    assert sorted(map(tuple, centers.tolist())) == sorted(distinct)
+    got = assign.collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert tuple(centers[r.cluster]) == (r.a, r.b, r.c)
+
+
+def test_kmeans_same_seed_same_result(spark):
+    df, cols = _blob_frame(spark, n_per_blob=15, seed=3)
+    runs = []
+    for _ in range(2):
+        assign, centers = kmeans_assign(df, "id", cols, k=7, seed=11)
+        runs.append((centers, sorted(assign.select("id", "cluster").collect())))
+    assert np.array_equal(runs[0][0], runs[1][0])
+    assert runs[0][1] == runs[1][1]
+
+
+def test_kmeans_merge_input_bounded_by_parallelism_times_k(spark):
+    from cinegraph_spark.operators.clustering import _local_pass
+
+    dp = spark.sparkContext.defaultParallelism
+    k = 5
+    df, cols = _blob_frame(spark, n_per_blob=20, partitions=3 * dp, seed=5)
+    local = _local_pass(df, cols, k, seed=42).collect()
+    assert len(local) <= dp * k
+    # every row is accounted for in the weights
+    assert sum(r["_w"] for r in local) == df.count()
+
+
+def test_graph_build_job_count_bounded(spark):
+    rng = np.random.default_rng(7)
+    cols = [f"x{j}" for j in range(24)]
+    rows = [(i, *map(float, rng.normal(size=24))) for i in range(137)]
+    feats = spark.createDataFrame(
+        rows, "id long, " + ", ".join(f"{c} double" for c in cols)
+    ).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "test_graph_build_job_count_bounded"
+    sc.setJobGroup(group, group)
+    try:
+        graph, membership = build_graph_tables(spark, feats, "id", cols, seed=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 12, len(jobs)
+    assert membership.count() == 137
+    assert graph.filter(F.col("path") == "root").count() == 1

@@ -367,3 +367,40 @@ def test_injected_model_full_pipeline_matches_stub_bookkeeping(
         ]
     )
     assert got == want
+
+
+# --- stub scorer: 64-bit keys ------------------------------------------------
+
+
+def test_stub_scores_hashed_and_negative_keys_match_duckdb(spark, duck):
+    """A hashed 64-bit key times 13 overflowed (ANSI ARITHMETIC_OVERFLOW) and
+    a negative key gave a negative score. Spark and DuckDB agree on every
+    key, scores stay in [0, 1), and a non-negative key keeps its old value."""
+    from cinegraph_spark.operators.scoring import _MOD, stub_scores, stub_scores_sql
+
+    keys = [-7046029254386353131, -5, 0, 123456789]
+    rows = [(key, w, ["ab", "cde", "f"][: w + 1]) for key in keys for w in range(3)]
+    got = {
+        (r["key"], r["window_id"]): [r[e] for e in EMOTIONS]
+        for r in stub_scores(
+            spark.createDataFrame(rows, "key long, window_id int, window_tokens array<string>"),
+            "key",
+        ).collect()
+    }
+    values = ", ".join(
+        f"({key}::BIGINT, {w}, {['ab', 'cde', 'f'][: w + 1]!r})" for key, w, _ in rows
+    )
+    sql = (
+        f"SELECT key, window_id, {', '.join(stub_scores_sql('toks', 'key', 'window_id'))} "
+        f"FROM (VALUES {values}) t(key, window_id, toks)"
+    )
+    want = {(r[0], r[1]): list(r[2:]) for r in duck.execute(sql).fetchall()}
+    assert got == want
+    for (key, w), scores in got.items():
+        assert all(0.0 <= s < 1.0 for s in scores), (key, scores)
+        if key >= 0:
+            weight = sum(len(t) for t in ["ab", "cde", "f"][: w + 1])
+            assert scores == [
+                ((weight * (i + 1) + key * 13 + w * 7) % _MOD) / _MOD
+                for i in range(len(EMOTIONS))
+            ]

@@ -109,3 +109,16 @@ def test_full_chain_matches_python_reference(spark):
     }
     for i, e in enumerate(expected):
         assert got[i] == e, f"chain on case {i}"
+
+
+def test_position_tag_before_speaker_label_spark_matches_duckdb(spark, duck):
+    """``{\\an8} JOHN: …``: removing the tag leaves a space before the label,
+    which the label patterns accept (a deliberate deviation from the
+    reference's ``^``-anchored chain). Spark and DuckDB share the spec."""
+    from cinegraph_spark.functions.text_clean import clean_subtitles_sql
+
+    text = "1\n00:00:01,000 --> 00:00:02,000\n{\\an8} JOHN: we go now.\n\t{\\an8} Mary Ann: fine.\n"
+    df = spark.createDataFrame([(text,)], "t string")
+    got = df.select(clean_subtitles(F.col("t")).alias("out")).first()["out"]
+    want = duck.execute(f"SELECT {clean_subtitles_sql('t')} FROM (SELECT ? AS t)", [text]).fetchone()[0]
+    assert got == want == "we go now fine"
