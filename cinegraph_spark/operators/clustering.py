@@ -11,13 +11,14 @@ stage, exact and cheap at any corpus size.
 The wide step (:func:`kmeans_assign`) is a seeded, weighted k-means++/Lloyd
 numpy kernel (:func:`weighted_kmeans`) run in two executor passes over
 Arrow batches: every input partition (coalesced to at most
-``defaultParallelism``) clusters its own rows into at most ``k`` weighted
-centers, then one task merges those ``≤ defaultParallelism × k`` centers
-into the final ``k`` and only they reach the driver. A lazy map-only pass
-then labels each row with its nearest center. No Spark ML: a fit is one
-collect over two stages, where Spark ML's KMeans ran a k-means|| init plus
-up to 20 Lloyd rounds, each its own job. A pass-1 task holds its
-partition's rows as one float64 matrix (rows × d × 8 bytes).
+``defaultParallelism``) streams its rows into at most ``SUMMARY × k``
+weighted centers (:func:`summarize`, chunk by chunk, so a task holds
+O(``CHUNK_ROWS`` + ``SUMMARY × k``) rows at any partition size), then one
+task merges those ``≤ defaultParallelism × SUMMARY × k`` centers into the
+final ``k`` and only they reach the driver. A lazy map-only pass then
+labels each row with its nearest center. No Spark ML: a fit is one collect
+over two stages, where Spark ML's KMeans ran a k-means|| init plus up to 20
+Lloyd rounds, each its own job.
 
 Ward linkage is implemented here directly (Lance-Williams recurrence over
 the centroid distance matrix — scipy isn't available in this environment);
@@ -57,9 +58,20 @@ def n_micro_clusters(n: int) -> int:
 LLOYD_ITERS = 20
 LLOYD_TOL = 1e-4
 #: seeded k-means++/Lloyd restarts in the merge; the lowest weighted cost
-#: wins. The merge input is at most ``defaultParallelism × k`` rows, so
-#: restarts are cheap there and nowhere else.
+#: wins. The merge input is at most ``defaultParallelism × SUMMARY × k``
+#: rows, so restarts are cheap there and nowhere else.
 MERGE_RESTARTS = 4
+#: pass-1 summary size per final center: a partition reduces its rows to at
+#: most ``SUMMARY × k`` weighted centers, a finer summary than the final
+#: clustering, so the merge sees each partition's shape rather than one
+#: local k-means of it (the streaming k-means coreset idea: Guha et al.
+#: 2003; Ailon, Jaiswal & Monteleoni 2009 keep O(k log k) per chunk).
+SUMMARY = 4
+#: rows a pass-1 task reads before it reduces: each chunk, together with the
+#: centers carried from the chunks before it, becomes at most
+#: ``SUMMARY × k`` weighted centers, so a task holds
+#: O(CHUNK_ROWS + SUMMARY × k) rows at any partition size.
+CHUNK_ROWS = 1 << 16
 #: cap on the entries of one rows × centers distance block (32 MB of
 #: float64), so a partition of any size never builds an n × k matrix.
 _BLOCK = 1 << 22
@@ -74,10 +86,14 @@ def _nearest(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     step = max(1, _BLOCK // max(1, len(C)))
     for lo in range(0, len(X), step):
         x = X[lo : lo + step]
-        d = (x * x).sum(1)[:, None] - 2.0 * (x @ C.T) + cc[None, :]
+        # ‖c‖² − 2 x·c: the squared distance less ‖x‖², which is the same
+        # for every center of a row, so it is added back to the minimum only
+        d = x @ C.T
+        d *= -2.0
+        d += cc
         lab = d.argmin(1)
         labels[lo : lo + step] = lab
-        d2[lo : lo + step] = np.maximum(d[np.arange(len(x)), lab], 0.0)
+        d2[lo : lo + step] = np.maximum(d[np.arange(len(x)), lab] + (x * x).sum(1), 0.0)
     return labels, d2
 
 
@@ -132,7 +148,12 @@ def _lloyd(X: np.ndarray, w: np.ndarray, C: np.ndarray):
 
 
 def weighted_kmeans(
-    X: np.ndarray, w: np.ndarray, k: int, seed: int, stream: int = 0, restarts: int = 1
+    X: np.ndarray,
+    w: np.ndarray,
+    k: int,
+    seed: int,
+    stream: tuple[int, ...] = (),
+    restarts: int = 1,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Seeded weighted k-means of the rows ``X`` (weights ``w``).
 
@@ -148,7 +169,7 @@ def weighted_kmeans(
     w = np.bincount(inv.reshape(-1), weights=w, minlength=len(X))
     if len(X) <= k:
         return X, w
-    rng = np.random.default_rng([seed % 2**64, stream])
+    rng = np.random.default_rng([seed % 2**64, *stream])
     best = None
     for _ in range(restarts):
         C, labels, cost = _lloyd(X, w, _kmeanspp(X, w, k, rng))
@@ -182,18 +203,53 @@ def _centers_batch(C: np.ndarray, mass: np.ndarray):
     )
 
 
+def _chunks(blocks, size: int):
+    """Re-cut row blocks into chunks of exactly ``size`` rows (the last one
+    may be shorter), so the chunking does not depend on batch sizes."""
+    pending, held = [], 0
+    for X in blocks:
+        while len(X):
+            take = X[: size - held]
+            X = X[len(take) :]
+            pending.append(take)
+            held += len(take)
+            if held == size:
+                yield np.concatenate(pending)
+                pending, held = [], 0
+    if held:
+        yield np.concatenate(pending)
+
+
+def summarize(blocks, m: int, seed: int, stream: int = 0):
+    """Stream row blocks into at most ``m`` weighted centers.
+
+    Rows are reduced in chunks of ``max(CHUNK_ROWS, m)``, each together
+    with the weighted centers carried from the chunks before it, so at most
+    O(CHUNK_ROWS + m) rows are held at once. Chunk ``i`` draws from the
+    random stream ``(seed, stream, i)``. Returns ``(centers, weights)``;
+    both are empty when there are no rows."""
+    C, w = None, None
+    for i, X in enumerate(_chunks(blocks, max(CHUNK_ROWS, m))):
+        wx = np.ones(len(X))
+        if C is not None:
+            X, wx = np.concatenate([C, X]), np.concatenate([w, wx])
+        C, w = weighted_kmeans(X, wx, m, seed, stream=(stream, i))
+    if C is None:
+        return np.empty((0, 0)), np.empty(0)
+    return C, w
+
+
 def _local_centers(batches, cols: list[str], k: int, seed: int):
-    """Pass 1, one task per (coalesced) input partition: cluster the
-    partition's rows into at most ``k`` weighted centers."""
+    """Pass 1, one task per (coalesced) input partition: stream the
+    partition's rows into at most ``SUMMARY × k`` weighted centers."""
     from pyspark import TaskContext
 
-    mats = [_matrix(b, cols) for b in batches if b.num_rows]
-    if not mats:
-        return
-    X = np.concatenate(mats)
     pid = TaskContext.get().partitionId()
-    C, mass = weighted_kmeans(X, np.ones(len(X)), k, seed, stream=pid + 1)
-    yield _centers_batch(C, mass)
+    C, mass = summarize(
+        (_matrix(b, cols) for b in batches), SUMMARY * k, seed, stream=pid + 1
+    )
+    if len(C):
+        yield _centers_batch(C, mass)
 
 
 def _merge_centers(batches, d: int, k: int, seed: int):
@@ -206,7 +262,7 @@ def _merge_centers(batches, d: int, k: int, seed: int):
     X = np.concatenate(
         [b.column("_c").flatten().to_numpy().reshape(-1, d) for b in batches]
     )
-    yield _centers_batch(*weighted_kmeans(X, w, k, seed, stream=0, restarts=MERGE_RESTARTS))
+    yield _centers_batch(*weighted_kmeans(X, w, k, seed, restarts=MERGE_RESTARTS))
 
 
 def _assign_batches(batches, cols: list[str], centers: np.ndarray):
@@ -219,8 +275,9 @@ def _assign_batches(batches, cols: list[str], centers: np.ndarray):
 
 
 def _local_pass(rows, cols: list[str], k: int, seed: int):
-    """Pass 1 as a frame ``[_w, _c]``: at most ``k`` weighted centers per
-    partition of ``rows`` coalesced to ``defaultParallelism`` partitions."""
+    """Pass 1 as a frame ``[_w, _c]``: at most ``SUMMARY × k`` weighted
+    centers per partition of ``rows`` coalesced to ``defaultParallelism``
+    partitions."""
     return (
         rows.select(*cols)
         .coalesce(rows.sparkSession.sparkContext.defaultParallelism)
@@ -241,16 +298,18 @@ def kmeans_assign(features_df, key_col: str, feature_cols: list[str], k: int | N
     different algorithm by design, SURVEY §2.6 C1 [PROP]):
 
     1. the input, coalesced to at most ``defaultParallelism`` partitions,
-       is clustered partition-locally into at most ``k`` weighted centers
-       each (:func:`weighted_kmeans`, random stream per partition index);
-    2. one task merges those ≤ ``defaultParallelism × k`` weighted centers
-       into the final ``k`` — best of :data:`MERGE_RESTARTS` seeded
-       restarts by weighted cost — and only those ``k`` rows reach the
-       driver.
+       is streamed partition-locally into at most ``SUMMARY × k`` weighted
+       centers each (:func:`summarize`: chunks of ``CHUNK_ROWS`` rows, a
+       random stream per partition index and chunk);
+    2. one task merges those ≤ ``defaultParallelism × SUMMARY × k``
+       weighted centers into the final ``k`` — best of
+       :data:`MERGE_RESTARTS` seeded restarts by weighted cost — and only
+       those ``k`` rows reach the driver.
 
     The assignment is a third, lazy map-only pass: nearest final center
-    per row. The result is a function of ``seed``, the rows and how they
-    are partitioned. Raises ``ValueError`` on an empty input.
+    per row. The result is a function of ``seed``, the rows, how they are
+    partitioned and, past ``CHUNK_ROWS`` rows in a partition, their order.
+    Raises ``ValueError`` on an empty input.
     """
     from pyspark.sql.types import IntegerType, StructField, StructType
 

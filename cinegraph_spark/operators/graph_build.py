@@ -6,10 +6,11 @@ Pipeline (three eager collects of ≤ k rows each, a fourth of representative
 keys with a namer, then the driver-side small steps):
 
     features(24-dim) ──agg──► n, mean, std per feature           [1 row]
-    features ──scale (literals)──► pass 1: ≤k weighted centers
+    features ──scale (literals)──► pass 1: ≤4k weighted centers
       per partition ──► pass 2: one task merges to k centers     [wide]
     scaled ──nearest center──► assignments(key, features, cluster)
       ──groupBy cluster──► count + feature sums                  [≤k rows]
+    assignments ──(key, cluster)──► cached for the membership join
     centroids(≤800×24, a few KB) ──ward──► tree ──rebalance──► flatten  [driver]
     graph/membership rows ──createDataFrame──► serving tables           [tiny]
 
@@ -57,7 +58,6 @@ def _iter_nodes(tree: dict):
 
 def node_representatives(
     assignments: DataFrame,
-    scaled: DataFrame,
     tree: dict,
     key_col: str,
     feature_cols: list[str],
@@ -65,7 +65,8 @@ def node_representatives(
 ) -> None:
     """C6 distributed: attach ``_representatives`` (the ``top`` member keys
     closest to the node centroid, ``graph_creator.py:343-354``) to every
-    annotated tree node, without collecting the corpus.
+    annotated tree node, without collecting the corpus. ``assignments``
+    carries ``key_col``, ``cluster`` and the (scaled) ``feature_cols``.
 
     Plan shape: a tiny (node, cluster, centroid) mapping table — Σ over
     nodes of their member-cluster count, ≤ nodes × k rows — broadcast-joined
@@ -98,8 +99,7 @@ def node_representatives(
     )
     w = Window.partitionBy("_tag").orderBy(F.asc("_dist"), F.asc(key_col))
     reps = (
-        assignments.join(scaled, key_col)
-        .join(F.broadcast(mapping), "cluster")
+        assignments.join(F.broadcast(mapping), "cluster")
         .select("_tag", key_col, dist.alias("_dist"))
         .withColumn("_rnk", F.row_number().over(w))
         .filter(F.col("_rnk") <= top)
@@ -164,8 +164,10 @@ def build_graph_tables(
         k = n_micro_clusters(stats["_n"])
     scaled = features.selectExpr(
         f"`{key_col}`", *scale_by(feature_cols, lambda name: _sql_double(stats[name]))
-    ).persist()
-    # assignments carry the scaled features next to ``cluster``
+    )
+    # assignments carry the scaled features next to ``cluster``: the one
+    # cache the summary and the representatives read (``scaled`` is read
+    # twice, by the fit and by this cache, so it is not cached itself)
     assignments, centers = kmeans_assign(scaled, key_col, feature_cols, k=k, seed=seed)
     assignments = assignments.persist()
 
@@ -189,9 +191,13 @@ def build_graph_tables(
     tree = rebalance_tree(linkage_to_tree(Z, members))
     annotate_tree(tree, counts, sums, list(feature_cols))
     if namer is not None:
-        node_representatives(
-            assignments.select(key_col, "cluster"), scaled, tree, key_col, feature_cols
-        )
+        node_representatives(assignments, tree, key_col, feature_cols)
+    # membership needs only (key, cluster): cache that (a no-op write fills
+    # it in one map-only job) and drop the wide cache, so no copy of the
+    # scaled features outlives the build
+    keyed = assignments.select(key_col, "cluster").persist()
+    keyed.write.format("noop").mode("overwrite").save()
+    assignments.unpersist()
     flat: FlatGraph = flatten_tree(tree, namer=namer)
 
     from cinegraph_spark.session import local_df
@@ -208,10 +214,9 @@ def build_graph_tables(
         "cluster int, graph_id long",
     )
     membership_df = (
-        assignments.join(F.broadcast(leaf_map), "cluster")
+        keyed.join(F.broadcast(leaf_map), "cluster")
         .select(F.col(key_col).cast("long").alias(key_col), "graph_id")
     )
-    scaled.unpersist()
     return graph_df, membership_df
 
 

@@ -1,7 +1,7 @@
 """Clustering/hierarchy pipeline queries (C1-C8) — [PROP] operators
 (SURVEY §2.6): k-means micro-clustering, ward tree, rebalance, flatten.
 The micro-clusters depend on the seed and on how the features are
-partitioned (each partition is clustered locally before one merge, and
+partitioned (each partition is summarized locally before one merge, and
 the partition count follows ``defaultParallelism``), so these take the
 driver's rows-only gate; the structural invariants are enforced by
 tests/test_clustering.py.

@@ -380,16 +380,40 @@ def test_kmeans_same_seed_same_result(spark):
     assert runs[0][1] == runs[1][1]
 
 
-def test_kmeans_merge_input_bounded_by_parallelism_times_k(spark):
-    from cinegraph_spark.operators.clustering import _local_pass
+def test_kmeans_merge_input_bounded_by_parallelism_times_summary(spark):
+    from cinegraph_spark.operators.clustering import SUMMARY, _local_pass
 
     dp = spark.sparkContext.defaultParallelism
-    k = 5
+    k = 2
     df, cols = _blob_frame(spark, n_per_blob=20, partitions=3 * dp, seed=5)
     local = _local_pass(df, cols, k, seed=42).collect()
-    assert len(local) <= dp * k
+    assert len(local) <= dp * SUMMARY * k
     # every row is accounted for in the weights
     assert sum(r["_w"] for r in local) == df.count()
+
+
+def test_summarize_streams_chunks_independent_of_block_sizes(monkeypatch):
+    from cinegraph_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "CHUNK_ROWS", 64)
+    rng = np.random.default_rng(9)
+    X = rng.normal(size=(1000, 5))
+    seen = []
+    real = clustering.weighted_kmeans
+
+    def spy(X, w, k, seed, stream=(), restarts=1):
+        seen.append(len(X))
+        return real(X, w, k, seed, stream=stream, restarts=restarts)
+
+    monkeypatch.setattr(clustering, "weighted_kmeans", spy)
+    C1, w1 = clustering.summarize(iter([X]), 16, seed=3)
+    # every reduction holds one chunk plus the ≤ m carried centers
+    assert max(seen) <= 64 + 16
+    C2, w2 = clustering.summarize(iter(np.array_split(X, 37)), 16, seed=3)
+    assert len(C1) <= 16 and w1.sum() == 1000
+    assert np.array_equal(C1, C2) and np.array_equal(w1, w2)
+    C0, w0 = clustering.summarize(iter([X[:0]]), 16, seed=3)
+    assert len(C0) == 0 and len(w0) == 0
 
 
 def test_graph_build_job_count_bounded(spark):
